@@ -175,6 +175,8 @@ def main() -> int:
     os.makedirs(os.path.join(workdir, "tmp"))
     os.environ["TMPDIR"] = os.path.join(workdir, "tmp")
     tempfile.tempdir = None
+    # takes precedence over spark.local.dir when set
+    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(workdir, "spark-local")
 
     import tracing
     import workloads
