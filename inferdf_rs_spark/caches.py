@@ -54,13 +54,10 @@ class CheckpointTracker:
         self.ids |= created
         return out, created
 
-    def checkpoint(
-        self, df: DataFrame, eager: bool = True, storage_level=None
-    ) -> tuple[DataFrame, set[int]]:
-        """localCheckpoint ``df``; returns (checkpointed df, created ids)."""
-        if storage_level is not None:
-            return self._run(lambda: df.localCheckpoint(eager=eager, storageLevel=storage_level))
-        return self._run(lambda: df.localCheckpoint(eager=eager))
+    def checkpoint(self, df: DataFrame) -> tuple[DataFrame, set[int]]:
+        """Eagerly localCheckpoint ``df`` (memory-and-disk, deserialized
+        blocks); returns (checkpointed df, created ids)."""
+        return self._run(lambda: df.localCheckpoint(eager=True))
 
     def persist(self, df: DataFrame, storage_level) -> tuple[DataFrame, set[int], int]:
         """persist + materialize (count) so the cached RDD registers

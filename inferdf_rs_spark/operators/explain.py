@@ -174,9 +174,7 @@ def _winning_substitutions(
     # property of the inner ``stmt`` (an ``st``-level check made the
     # inversion branch unreachable through round 5, silently demoting
     # every hop to the store-sized fallback; see OPTIMIZATION_r06.md)
-    n_pb = p_buckets if p_buckets is not None else getattr(store, "_inferdf_p_buckets", None)
-    if n_pb and "p_bucket" not in store.columns:
-        n_pb = None
+    n_pb = p_buckets if "p_bucket" in store.columns else None
     pk = _explain_pack(rule, const_ids, n_pb)
     if pk["invertible"]:
         parts = []
@@ -244,11 +242,7 @@ def explain_step(ds, system, targets: DataFrame | None = None) -> DataFrame:
             F.col("fsign").alias("psign"),
         ).limit(0)
     ]
-    n_pb = ds.p_buckets if getattr(ds, "p_buckets", None) is not None else getattr(
-        store, "_inferdf_p_buckets", None
-    )
-    if n_pb and "p_bucket" not in store.columns:
-        n_pb = None
+    n_pb = ds.p_buckets if "p_bucket" in store.columns else None
     for rule in system.rules:
         pk = _explain_pack(rule, const_ids, n_pb)
         frontier_r = frontier.filter(pk["frontier_cond"])

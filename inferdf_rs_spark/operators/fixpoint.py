@@ -28,9 +28,10 @@ Scale design:
   a delta round only if at least one hypothesis slot can match a delta
   triple — checked driver-side on the delta's distinct (sign, p) set
   against the slot's sign and constant predicate;
-- large deltas spill: past ``delta_disk_threshold`` rows the piece
-  checkpoints use MEMORY_AND_DISK_DESER blocks that evict under memory
-  pressure (kills the all-deltas-in-RAM cliff);
+- every checkpoint (store pieces, deltas, terms) is memory-and-disk,
+  deserialized — the ``localCheckpoint`` default — so blocks stay
+  deserialized for the per-round scans while they fit and evict to disk
+  under memory pressure;
 - every round's new facts and new terms are (optionally) appended as a
   parquet checkpoint with an atomically-updated meta file, so a killed
   job resumes between rounds (north_rule requirement);
@@ -185,6 +186,10 @@ def read_meta(d: str) -> dict | None:
         return None
 
 
+# max number of co-partitioned store pieces before they are compacted
+# into one (a single store-size exchange, amortized over that many rounds)
+COMPACT_PIECES = 16
+
 EQS_SCHEMA = "a bigint, b bigint, sign boolean, rule_id bigint, subst_hash bigint"
 TRUES_SCHEMA = (
     "res bigint, vtype int, bval boolean, verr int, sign boolean, rule_id bigint, subst_hash bigint"
@@ -201,9 +206,6 @@ def fixpoint(
     max_rounds: int = 100,
     checkpoint_dir: str | None = None,
     insert_negatives: bool = False,
-    strict_errors: bool = True,
-    delta_disk_threshold: int = 2_000_000,
-    compact_pieces: int = 16,
     store_broadcast_rows: int = 2_000_000,
     initial_delta: DataFrame | None = None,
     allow_partial: bool = False,
@@ -217,13 +219,8 @@ def fixpoint(
     statements accumulate in side tables for the caller (the reference
     likewise leaves them to the caller — it only checks them in
     validation).  Set ``insert_negatives`` to also store negative facts.
+    A rule whose expression evaluation errors raises ``ExpressionError``.
 
-    ``delta_disk_threshold``: rounds whose previous delta exceeded this
-    many rows checkpoint to disk-evictable (MEMORY_AND_DISK_DESER) blocks
-    instead of pinned executor memory.
-    ``compact_pieces``: max number of co-partitioned store pieces before
-    they are compacted into one (a single store-size exchange, amortized
-    over that many rounds).
     ``store_broadcast_rows``: while the accumulated store is at most this
     many rows, the per-round new-facts anti-join broadcasts the store
     (map-side, zero exchange — fastest at small scale); past it the loop
@@ -318,7 +315,7 @@ def fixpoint(
         out, _ = tracker.checkpoint(df)
         return out
 
-    def _piece(df: DataFrame, big: bool) -> DataFrame:
+    def _piece(df: DataFrame) -> tuple[DataFrame, set[int]]:
         """Hash-partition on the triple key, sort within partitions, then
         checkpoint: the captured LogicalRDD partitioning+ordering make
         every later anti-join against this piece exchange-free AND
@@ -329,19 +326,10 @@ def fixpoint(
         (verified: with AQE on the LogicalRDD reports
         UnknownPartitioning and every round re-exchanges the store)."""
         rp = df.repartition(n_part, *TRIPLE_KEY).sortWithinPartitions(*TRIPLE_KEY)
-        # big pieces: MEMORY_AND_DISK_DESER — stays DESERIALIZED in memory
-        # while it fits (the store is scanned by every rule slot every
-        # round; serialized/disk levels pay per-scan deserialization,
-        # measured ~2x slower fixpoint at 38M stated facts) and evicts to
-        # disk under pressure (caps the all-deltas-in-RAM RSS cliff).
-        # NB PySpark's bare MEMORY_AND_DISK constant is the *serialized*
-        # level — not what we want on the scan-hot store.
-        lvl = StorageLevel.MEMORY_AND_DISK_DESER if big else None
         prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            out, ids = tracker.checkpoint(rp, storage_level=lvl)
-            return out, ids
+            return tracker.checkpoint(rp)
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
@@ -360,7 +348,7 @@ def fixpoint(
         n_store = store_rows
         large = n_store > store_broadcast_rows
         if large:
-            pc0, ids0 = _piece(store, big=True)
+            pc0, ids0 = _piece(store)
             pieces, piece_idsets = [pc0], [ids0]
         else:
             base, base_ids, _ = tracker.persist(store, StorageLevel.MEMORY_AND_DISK_DESER)
@@ -372,7 +360,7 @@ def fixpoint(
         large = n_store > store_broadcast_rows
         if large:
             # _piece (AQE off for partitioning capture) reshuffles cached blocks
-            pc0, ids0 = _piece(base, big=True)
+            pc0, ids0 = _piece(base)
             pieces, piece_idsets = [pc0], [ids0]
             base.unpersist()
             tracker.ids -= base_ids
@@ -393,11 +381,6 @@ def fixpoint(
             out = out.unionByName(pc)
         return out
 
-    import sys
-    import time as _time
-
-    debug_timing = os.environ.get("INFERDF_DEBUG_TIMING") == "1"
-
     rnd = start_round
     last_new = 0
     # blocks kept alive one extra round because the delta still reads
@@ -414,7 +397,6 @@ def fixpoint(
     while rnd < max_rounds:
         rnd += 1
         scan_store = store_union()
-        _t0 = _time.perf_counter()
         active = _dispatch_rules(rules, const_ids, delta, delta_ps)
         c = _deduce_round(spark, scan_store, terms, active, const_ids, delta, rnd, functions)
 
@@ -452,7 +434,7 @@ def fixpoint(
         # computation per round, not two.  The deduction runs under AQE in
         # this localCheckpoint; the following _piece shuffle (AQE off for
         # partitioning capture) only re-reads its blocks.
-        check_errors = strict_errors and any(r.has_expressions() for _, r in active)
+        check_errors = any(r.has_expressions() for _, r in active)
         if check_errors:
             err_rows = c.errors.select(
                 F.lit(None).cast("long").alias("s"),
@@ -514,7 +496,7 @@ def fixpoint(
             )
         new_src = staged.filter(F.col("err") == 0).drop("err") if check_errors else staged
         if large:
-            new, new_ids = _piece(new_src, big=last_new > delta_disk_threshold)
+            new, new_ids = _piece(new_src)
             staged.unpersist()
         else:
             new = new_src  # (a filter over) checkpointed narrow blocks
@@ -523,11 +505,6 @@ def fixpoint(
         delta_ps = {(r.p, r.sign) for r in stats["dps"]}
         last_new = n_new
         new_full = _attach_lineage(new, rnd)
-        if debug_timing:
-            sys.stderr.write(
-                f"[fixpoint] round={rnd} new={n_new} rules={[i for i, _ in active]} "
-                f"deduce+anti+ckpt={_time.perf_counter() - _t0:.2f}s\n"
-            )
 
         # static rule analysis: skip side-channel actions (term minting,
         # Eq/True accumulation) when no active rule can produce them —
@@ -595,15 +572,15 @@ def fixpoint(
         pieces.append(new_full)
         piece_idsets.append(new_ids)
         if (not large and n_store > store_broadcast_rows) or (
-            large and len(pieces) > compact_pieces
+            large and len(pieces) > COMPACT_PIECES
         ):
             # crossed the broadcastable horizon (one store-size exchange,
             # then exchange-free rounds) — or compacting the piece chain
-            # (the same exchange, amortized over compact_pieces rounds).
+            # (the same exchange, amortized over COMPACT_PIECES rounds).
             # Superseded piece generations are released, EXCEPT the
             # current round's blocks, which the next round's delta reads.
             large = True
-            merged, merged_ids = _piece(store_union(), big=True)
+            merged, merged_ids = _piece(store_union())
             for ids in piece_idsets[:-1]:
                 tracker.release(ids - new_ids)
             if base_live:

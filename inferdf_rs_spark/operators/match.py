@@ -66,15 +66,11 @@ def scan_pattern(
       directory — the reference's canonical-pattern index
       (src/pattern/map.rs:13-25) as Hive-style partition pruning.  The
       predicate is only added when ``p_bucket`` is actually among the
-      store's columns (a wrapped/projected frame may have dropped it);
-      the legacy ``_inferdf_p_buckets`` DataFrame attribute is honored
-      as a fallback.
+      store's columns (a wrapped/projected frame may have dropped it).
 
     Output columns: ``v{i}`` for each variable ``i`` in the pattern.
     """
-    n_p_buckets = p_buckets if p_buckets is not None else getattr(triples, "_inferdf_p_buckets", None)
-    if n_p_buckets and "p_bucket" not in triples.columns:
-        n_p_buckets = None
+    n_p_buckets = p_buckets if "p_bucket" in triples.columns else None
     cond, sel, _cols = _build_scan(pattern, const_ids, n_p_buckets)
     out = triples.filter(cond)
     if sel is None:
@@ -166,9 +162,7 @@ def find_substitutions(
 
     # bucket pruning applies to store-side scans only (the delta is an
     # in-flight DataFrame without the partition column)
-    store_pb = p_buckets if p_buckets is not None else getattr(store, "_inferdf_p_buckets", None)
-    if store_pb and "p_bucket" not in store.columns:
-        store_pb = None
+    store_pb = p_buckets if "p_bucket" in store.columns else None
 
     # Per-rule scan-expression cache: a fixpoint re-enters here every
     # round with the same rule/const_ids — the scan Columns are identical

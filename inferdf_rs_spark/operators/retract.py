@@ -193,6 +193,7 @@ def retract(
         terms,
         rules,
         const_ids,
+        functions,
         initial_delta=rederived,
         initial_round=max_round + 1,
         max_rounds=max_round + 1 + max_rounds,

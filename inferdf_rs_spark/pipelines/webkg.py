@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..encode import dedup_triples, encode_edges, term_rows
 from ..engine import Dataset, System
 from ..extraction import synth
-from ..extraction.extract import extract_text, link_mentions
+from ..extraction.extract import link_mentions
 from ..operators.fixpoint import FixpointResult
 from ..rules import iri, pat, rule, stmt_triple, v
 from ..schemas import KIND_IRI, KIND_LITERAL, RDF_TYPE, XSD_STRING
@@ -168,7 +168,6 @@ def run_pipeline(
     audit_dictionary: bool = False,
     static_terms: DataFrame | None = None,
     aliases: list[str] | None = None,
-    fused_extract: bool = True,
     snapshots: bool = False,
     dedup_pages: bool = False,
 ) -> PipelineResult:
@@ -196,45 +195,29 @@ def run_pipeline(
         synth.entity_types(spark),
         synth.sameas_seed(spark),
     )
-    if fused_extract:
-        # ONE fused Arrow pass per page: html→text strip, byte-fidelity
-        # bit, and normalized mention detection — the extracted text never
-        # leaves the Python worker.  Persist ONLY the slim result (url,
-        # lang, surfaces, fidelity bit, ~0.1KB/page): the unfused shape
-        # caches the full extracted_text (~1.2KB/page) and ships it
-        # through Arrow a second time for detection.  Caching raw
-        # html+text would be worse still (3.5KB/page; measured 84s vs 31s
-        # at 2M pages).
-        from ..extraction.extract import collect_alias_vocabulary, make_fused_extract_detect
+    # ONE fused Arrow pass per page: html→text strip, byte-fidelity
+    # bit, and normalized mention detection — the extracted text never
+    # leaves the Python worker.  Persist ONLY the slim result (url,
+    # lang, surfaces, fidelity bit, ~0.1KB/page): caching the full
+    # extracted_text would cost ~1.2KB/page, raw html+text 3.5KB/page
+    # (measured 84s vs 31s at 2M pages).
+    from ..extraction.extract import collect_alias_vocabulary, make_fused_extract_detect
 
-        if aliases is None:
-            aliases = collect_alias_vocabulary(alias_d)
-        det = make_fused_extract_detect(aliases, spark=spark)
-        pages = (
-            pages.select(
-                "url", "lang", det(F.decode(F.col("html"), "utf-8"), F.col("text")).alias("_ex")
-            )
-            .select(
-                "url",
-                "lang",
-                F.col("_ex.surfaces").alias("surfaces"),
-                F.col("_ex.fid_ok").alias("_fid_ok"),
-            )
-            .persist()
+    if aliases is None:
+        aliases = collect_alias_vocabulary(alias_d)
+    det = make_fused_extract_detect(aliases, spark=spark)
+    pages = (
+        pages.select(
+            "url", "lang", det(F.decode(F.col("html"), "utf-8"), F.col("text")).alias("_ex")
         )
-    else:
-        # unfused A/B reference path: extract UDF + JVM fidelity bit,
-        # detection deferred to the linking stage over the cached text
-        pages = (
-            extract_text(pages)
-            .select(
-                "url",
-                "lang",
-                "extracted_text",
-                F.col("extracted_text").eqNullSafe(F.col("text")).alias("_fid_ok"),
-            )
-            .persist()
+        .select(
+            "url",
+            "lang",
+            F.col("_ex.surfaces").alias("surfaces"),
+            F.col("_ex.fid_ok").alias("_fid_ok"),
         )
+        .persist()
+    )
     stats = pages.agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("_fid_ok"), 0).otherwise(1)).alias("bad"),
@@ -252,7 +235,7 @@ def run_pipeline(
         etypes,
         sameas,
         aliases=aliases,
-        surfaces_col="surfaces" if fused_extract else None,
+        surfaces_col="surfaces",
     )
     # dictionary from its natural sources instead of a distinct over the
     # 3x-projected edge table: urls are unique per page (no shuffle),
@@ -433,10 +416,8 @@ def read_graph(spark: SparkSession, out_dir: str) -> Dataset:
     partitions (the reference's canonical-pattern index, expressed as
     Hive-style partition pruning).  The count lives on the Dataset — not
     as a DataFrame attribute — so it survives ``.filter()``/``.select()``
-    composition over ``triples``; the legacy ``_inferdf_p_buckets``
-    attribute is still set for direct-DataFrame callers holding the
-    pristine object.  The engine drops the extra column at fixpoint
-    entry, so the dataset still feeds every API."""
+    composition over ``triples``.  The engine drops the extra column at
+    fixpoint entry, so the dataset still feeds every API."""
     from pyspark.errors import AnalysisException
 
     from ..schemas import TRIPLES_SCHEMA
@@ -456,7 +437,6 @@ def read_graph(spark: SparkSession, out_dir: str) -> Dataset:
         p_buckets = meta["n_p_buckets"]
         n_triples = meta.get("n_triples")  # absent on pre-r5 layouts
         n_terms = meta.get("n_terms")
-        triples._inferdf_p_buckets = p_buckets
     except FileNotFoundError:
         triples = triples.drop("p_bucket")  # pre-meta layout: no pruning
     return Dataset(

@@ -16,10 +16,7 @@ restart via the streaming checkpoint.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..encode import dedup_triples, encode_edges
 from ..engine import Dataset, System
@@ -30,12 +27,14 @@ from ..terms import merge_terms
 class StreamingGraph:
     """Accumulates a closed graph from a stream of page batches.
 
-    Every batch runs through ``operators.fixpoint.fixpoint`` — the first
-    with a full deduce, later ones seeded with the batch delta
-    (``initial_delta``) — so the incremental path shares ALL of the batch
-    path's semantics: minted-term accumulation into the dictionary,
-    Eq/True side tables, strict expression errors, rule dispatch, and
-    the raise-on-round-cap guarantee (no silent partial closure)."""
+    Every batch runs through ``System.fixpoint`` — the first with a full
+    deduce, later ones seeded with the batch delta (``initial_delta``) —
+    so the incremental path shares ALL of the batch path's semantics:
+    minted-term accumulation into the dictionary, Eq/True side tables,
+    strict expression errors, rule dispatch, and the raise-on-round-cap
+    guarantee (no silent partial closure).  Retraction runs through
+    ``System.retract``, so inserts and deletes see the same rules,
+    constants and functions."""
 
     def __init__(
         self,
@@ -64,49 +63,48 @@ class StreamingGraph:
         self.batches = 0
         self._tracker = CheckpointTracker(spark)
         self._gen_ids: set[int] = set()
+        self._side_ids: set[int] = set()  # the eqs/trues part of _gen_ids
+
+    def _adopt(self, res, side: tuple[DataFrame, DataFrame] | None = None) -> None:
+        """Copy the result out of the fixpoint's internal caches, then
+        release them AND the previous generation: without this every
+        call would leave one cached copy of the (growing) store in the
+        pool — unbounded memory/disk growth in a long-running stream.
+        The pool holds exactly one generation of (store, terms, eqs,
+        trues) between batches.  The copy-out also truncates the plan,
+        so the store does not gain one union per batch.  ``side``: the
+        new (eqs, trues); ``None`` carries the current blocks over."""
+        old_gen = self._gen_ids
+        self.store, ids_s = self._tracker.checkpoint(res.store)
+        self.terms, ids_t = self._tracker.checkpoint(res.terms)
+        if side is not None:
+            self.eqs, ids_e = self._tracker.checkpoint(side[0])
+            self.trues, ids_r = self._tracker.checkpoint(side[1])
+            self._side_ids = ids_e | ids_r
+        self._gen_ids = ids_s | ids_t | self._side_ids
+        res.release()
+        self._tracker.release(old_gen - self._gen_ids)
 
     def process_batch(self, edges: DataFrame, epoch_id: int) -> None:
-        from ..operators.fixpoint import fixpoint
-
         ds = encode_edges(self.spark, edges, src_partition=f"stream:{epoch_id}")
         new_triples, ids_in1 = self._tracker.checkpoint(dedup_triples(ds.triples))
         new_terms, ids_in2 = self._tracker.checkpoint(ds.terms)
 
         if self.store is None:
-            base_terms = merge_terms(new_terms, self.system.rule_constants_terms())
-            res = self.system.fixpoint(Dataset(new_triples, base_terms))
+            store, delta = new_triples, None  # round 1 = full deduce
+            terms = merge_terms(new_terms, self.system.rule_constants_terms())
         else:
             # delta = genuinely-new stated facts; store already closed
             delta = new_triples.join(self.store.select(*TRIPLE_KEY), TRIPLE_KEY, "left_anti")
             store = self.store.unionByName(delta)
             terms = merge_terms(self.terms, new_terms)
-            res = fixpoint(
-                self.spark,
-                store,
-                terms,
-                self.system.rules,
-                self.system.const_ids(),
-                self.system.functions,
-                initial_delta=delta,
-            )
-        # copy the result out of the fixpoint's internal caches, then
-        # release them AND the previous batch's generation: without this
-        # every micro-batch would leave one cached copy of the (growing)
-        # store in the pool — unbounded memory/disk growth in a
-        # long-running stream.  The pool holds exactly one generation of
-        # (store, terms, eqs, trues) between batches.
-        old_gen = self._gen_ids
-        self.store, ids_s = self._tracker.checkpoint(res.store)
-        self.terms, ids_t = self._tracker.checkpoint(res.terms)
+        res = self.system.fixpoint(Dataset(store, terms), initial_delta=delta)
         eqs = res.eqs if self.eqs is None else self.eqs.unionByName(res.eqs).dropDuplicates()
         trues = (
             res.trues if self.trues is None else self.trues.unionByName(res.trues).dropDuplicates()
         )
-        self.eqs, ids_e = self._tracker.checkpoint(eqs)
-        self.trues, ids_r = self._tracker.checkpoint(trues)
-        self._gen_ids = ids_s | ids_t | ids_e | ids_r
-        res.release()
-        self._tracker.release(old_gen | ids_in1 | ids_in2)
+        self._adopt(res, (eqs, trues))
+        self._tracker.release(ids_in1 | ids_in2)
         self.batches += 1
         if self.commit_every and self.batches % self.commit_every == 0:
             self.publish()
@@ -114,32 +112,16 @@ class StreamingGraph:
     def retract_batch(self, retracted: DataFrame) -> None:
         """Remove stated facts mid-stream: DRed incremental retraction
         (operators/retract.py) over the accumulated closed store, with
-        the same one-generation cache swap as ``process_batch`` — the
-        pool still holds exactly one (store, terms, eqs, trues) between
-        batches.  ``retracted`` carries the TRIPLE_KEY columns.  A later
+        the same one-generation cache swap as ``process_batch``.
+        ``retract`` rejects Eq/True conclusions, so eqs/trues cannot
+        change: their blocks carry over into the new generation.
+        ``retracted`` carries the TRIPLE_KEY columns.  A later
         ``process_batch`` re-delivering a retracted fact sees it absent
         from the store and re-inserts it as a genuine delta (the
         retract/re-add round-trip is exact, pinned by pytest)."""
-        from ..operators.retract import retract as _retract
-
         if self.store is None:
             return
-        res = _retract(
-            self.spark,
-            self.store,
-            self.terms,
-            self.system.rules,
-            self.system.const_ids(),
-            retracted,
-        )
-        old_gen = self._gen_ids
-        self.store, ids_s = self._tracker.checkpoint(res.store)
-        self.terms, ids_t = self._tracker.checkpoint(res.terms)
-        self.eqs, ids_e = self._tracker.checkpoint(self.eqs)
-        self.trues, ids_r = self._tracker.checkpoint(self.trues)
-        self._gen_ids = ids_s | ids_t | ids_e | ids_r
-        res.release()
-        self._tracker.release(old_gen)
+        self._adopt(self.system.retract(Dataset(self.store, self.terms), retracted))
 
     def publish(self) -> int:
         """Commit the accumulated graph as a new snapshot version under

@@ -17,6 +17,7 @@ from inferdf_rs_spark import (
     v,
 )
 from inferdf_rs_spark.functions import DEFAULT_FUNCTIONS
+from inferdf_rs_spark.operators import fixpoint as fixpoint_mod
 from inferdf_rs_spark.sources.registry import read_dataset, write_dataset
 
 EX = "https://example.org/#"
@@ -271,7 +272,7 @@ def test_id_width_collision_fallback(spark):
         assert tdf.select("term_id").distinct().count() == 2000
 
 
-def test_id_width_128_engine_parity(spark):
+def test_id_width_128_engine_parity(spark, monkeypatch):
     """The full engine path — encode, conjunctive join, semi-naive
     fixpoint (both broadcast and co-partitioned-piece regimes), decode —
     must produce the identical lexical closure under 128-bit decimal ids
@@ -303,7 +304,8 @@ def test_id_width_128_engine_parity(spark):
     want = closure()
     with id_bits(128):
         assert closure() == want
-        assert closure(store_broadcast_rows=0, compact_pieces=2) == want
+        monkeypatch.setattr(fixpoint_mod, "COMPACT_PIECES", 2)
+        assert closure(store_broadcast_rows=0) == want
 
 
 def test_id_width_128_pipeline_parity(spark, tmp_path):

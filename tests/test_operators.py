@@ -19,6 +19,7 @@ from inferdf_rs_spark import (
     stmt_true,
     v,
 )
+from inferdf_rs_spark.operators import fixpoint as fixpoint_mod
 from inferdf_rs_spark.operators.fixpoint import ExpressionError
 from inferdf_rs_spark.operators.match import find_substitutions
 from inferdf_rs_spark.terms import decode_triples, encode_terms
@@ -494,10 +495,11 @@ def test_transitive_closure_fixpoint(spark):
     assert res2.rounds == 1 and res2.store.count() == 15
 
 
-def test_fixpoint_large_regime_copartitioned_pieces(spark):
+def test_fixpoint_large_regime_copartitioned_pieces(spark, monkeypatch):
     # store_broadcast_rows=0 forces the 100 TB plan — co-partitioned,
     # sorted store pieces with chained exchange-free anti-joins — which
-    # must produce exactly the same closure as the broadcast plan
+    # must produce exactly the same closure as the broadcast plan;
+    # COMPACT_PIECES=2 makes the piece chain compact mid-closure
     chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
     ds = build_dataset(spark, chain)
     r = rule(
@@ -510,7 +512,8 @@ def test_fixpoint_large_regime_copartitioned_pieces(spark):
     )
     sysm = System(spark, [r])
     res_small = sysm.fixpoint(ds)
-    res_large = sysm.fixpoint(ds, store_broadcast_rows=0, compact_pieces=2)
+    monkeypatch.setattr(fixpoint_mod, "COMPACT_PIECES", 2)
+    res_large = sysm.fixpoint(ds, store_broadcast_rows=0)
     got_s = sorted(map(tuple, res_small.store.select("s", "p", "o").collect()))
     got_l = sorted(map(tuple, res_large.store.select("s", "p", "o").collect()))
     assert got_s == got_l and len(got_l) == 15
@@ -581,14 +584,14 @@ def test_fixpoint_checkpoint_resume(spark, tmp_path):
     assert resumed.rounds == full.rounds
 
 
-def test_fixpoint_minting_eq_rules_survive_piece_compaction(spark):
+def test_fixpoint_minting_eq_rules_survive_piece_compaction(spark, monkeypatch):
     # regression: in the round AFTER a piece compaction (or the
     # small-to-large transition) the prior round's delta-checkpoint
     # blocks were released before the new_terms/eqs/trues jobs ran —
     # those jobs lazily recompute the deduction, which still reads that
     # delta, and a localCheckpoint's lineage is truncated, so any rule
     # system with term minting or Eq/True statements died with
-    # "checkpoint block not found".  compact_pieces=1 +
+    # "checkpoint block not found".  COMPACT_PIECES=1 +
     # store_broadcast_rows=0 force a compaction every round.
     chain = [(blank(str(i)), iri(EX + "anc"), blank(str(i + 1))) for i in range(5)]
     ds = build_dataset(spark, chain)
@@ -612,7 +615,8 @@ def test_fixpoint_minting_eq_rules_survive_piece_compaction(spark):
         existentials=1,
     )
     sysm = System(spark, [tc, eqr, mintr])
-    res = sysm.fixpoint(ds, store_broadcast_rows=0, compact_pieces=1)
+    monkeypatch.setattr(fixpoint_mod, "COMPACT_PIECES", 1)
+    res = sysm.fixpoint(ds, store_broadcast_rows=0)
     # closure complete: 15 anc facts + one minted witness per anc fact
     assert res.store.filter(F.col("s").isNotNull()).count() == 30
     # one Eq row per (substitution, lineage); 5 distinct reflexive pairs
@@ -746,7 +750,7 @@ def test_fixpoint_store_rows_metadata_skips_count(spark, monkeypatch):
     monkeypatch.setattr(
         dfmod.DataFrame, "count", lambda self: (counts.append(1), orig_count(self))[1]
     )
-    res = sysm.fixpoint(ds, store_broadcast_rows=0, compact_pieces=2, store_rows=5)
+    res = sysm.fixpoint(ds, store_broadcast_rows=0, store_rows=5)
     n_counts = len(counts)
     monkeypatch.undo()
     got = sorted(map(tuple, res.store.select("s", "p", "o").collect()))

@@ -100,6 +100,40 @@ def test_conclude_results_identical_across_cache_hits(spark):
     assert rows1 == rows2 and rows1  # non-vacuous
 
 
+def test_conclude_cache_survives_streaming_retract(spark):
+    """Live maintenance alternates ingest and retraction on one System:
+    both must hand the conclusion compiler the same (const_ids,
+    functions) objects, or every op recompiles every rule's pack."""
+    from inferdf_rs_spark import System
+    from inferdf_rs_spark.encode import iri_edges
+    from inferdf_rs_spark.streaming.ingest import StreamingGraph
+
+    rules = [
+        _mk_rule(),
+        rule(
+            variables=3,
+            hypothesis=[
+                pat("+", v(0), iri(EX + "knows"), v(1)),
+                pat("+", v(1), iri(EX + "knows"), v(2)),
+            ],
+            statements=[stmt_triple("+", v(0), iri(EX + "reaches"), v(2))],
+        ),
+    ]
+    sg = StreamingGraph(spark, System(spark, rules), out_dir="/tmp/unused")
+    edges = [(EX + a, EX + "knows", EX + b) for a, b in [("a", "b"), ("b", "c"), ("c", "d")]]
+    sg.process_batch(
+        iri_edges(spark.createDataFrame(edges, "s_lex string, p_lex string, o_lex string")), 0
+    )
+    packs = [getattr(r, "_conclude_cache", None) for r in sg.system.rules]
+    assert all(pk is not None for pk in packs)
+
+    doomed = build_dataset(spark, [(iri(EX + "b"), iri(EX + "knows"), iri(EX + "c"))])
+    sg.retract_batch(doomed.triples.select("s", "p", "o", "sign"))
+    assert sg.store.count() == 4  # a-b, c-d stated + their friendOf
+    assert all(r._conclude_cache is pk for r, pk in zip(sg.system.rules, packs))
+    sg._tracker.release()
+
+
 def test_facets_cache_per_terms_object(spark):
     ds = build_dataset(spark, [(blank("a"), iri(EX + "knows"), blank("b"))])
     f1 = resource_facets(ds.terms)

@@ -235,7 +235,7 @@ def test_materialized_graph_p_bound_scan_prunes_partitions(spark, tmp_path):
     out = str(tmp_path / "graph")
     write_graph(ds.triples, ds.terms, out)
     rg = read_graph(spark, out)
-    assert getattr(rg.triples, "_inferdf_p_buckets", None) == 16
+    assert rg.p_buckets == 16
 
     knows = iri(EX + "knows")
     cids = encode_terms(spark, [knows])
@@ -247,17 +247,14 @@ def test_materialized_graph_p_bound_scan_prunes_partitions(spark, tmp_path):
         assert "p_bucket" in pf_lines[0].split("PartitionFilters")[1]
         assert df.count() == expect_rows
 
-    assert_prunes(scan_pattern(rg.triples, pat("+", v(0), knows, v(1)), cids), 4)
+    assert_prunes(scan_pattern(rg.triples, pat("+", v(0), knows, v(1)), cids, p_buckets=rg.p_buckets), 4)
 
     # pruning must SURVIVE composition: the bucket count rides on the
-    # Dataset, so a .filter()-wrapped store (which sheds any ad-hoc
-    # DataFrame attribute) still prunes when the engine threads
-    # rg.p_buckets through (ADVICE r3)
-    assert rg.p_buckets == 16
+    # Dataset, so a .filter()-wrapped store still prunes when the engine
+    # threads rg.p_buckets through (ADVICE r3)
     from pyspark.sql import functions as F
 
     wrapped = rg.triples.filter(F.col("sign"))
-    assert getattr(wrapped, "_inferdf_p_buckets", None) is None  # attr is gone
     assert_prunes(
         scan_pattern(wrapped, pat("+", v(0), knows, v(1)), cids, p_buckets=rg.p_buckets), 4
     )
