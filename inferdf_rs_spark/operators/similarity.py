@@ -346,15 +346,15 @@ def embedding_near_dup_pairs(
     thr = float(threshold)
 
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf[id_col].to_numpy()  # any orderable id type: emitted as is
         empty = {
-            "id_a": np.array([], dtype=np.int64),
-            "id_b": np.array([], dtype=np.int64),
+            "id_a": np.array([], dtype=ids.dtype),
+            "id_b": np.array([], dtype=ids.dtype),
             "cosine_micro": np.array([], dtype=np.int64),
         }
         n = len(pdf)
         if n < 2:
             return pd.DataFrame(empty)
-        ids = pdf[id_col].to_numpy()
         V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         norms = np.sqrt(_dot_lr(V, V))  # row-wise: identical to the per-pair _dot_lr(A, A)
         # pair index memory is O(occupancy^2) per bucket — the same bound
@@ -372,8 +372,8 @@ def embedding_near_dup_pairs(
             if keep.any():
                 outs.append(
                     {
-                        "id_a": ids[sa[keep]].astype(np.int64),
-                        "id_b": ids[sb[keep]].astype(np.int64),
+                        "id_a": ids[sa[keep]],
+                        "id_b": ids[sb[keep]],
                         "cosine_micro": np.floor(cos[keep] * 1e6).astype(np.int64),
                     }
                 )

@@ -3,15 +3,19 @@
 The reference has no streaming (SURVEY.md §2.10), but its seeded
 ``deduce_from_triple`` API (src/system/mod.rs:124-149) is exactly the
 incremental-maintenance hook: each micro-batch of new stated triples is
-a *delta*, and one semi-naive round per batch keeps the materialized
-graph closed under the rule system (rules whose every hypothesis slot
-can be fed by earlier facts stay correct because the store passed to
-the round is the accumulated graph).
+a *delta*, and ``System.fixpoint`` seeded with that delta
+(``initial_delta``) runs to convergence against the accumulated closed
+store, so every rule stays correct however its hypotheses are fed.
 
 Shape: ``readStream`` (file source) → ``foreachBatch`` → per-batch:
-encode, delta-deduce against the accumulated store, anti-join, append
-to the graph directory.  ``foreachBatch`` gives exactly-once appends on
-restart via the streaming checkpoint.
+materialize the batch's edge table once (extraction and linking run a
+single time however many projections read it), encode and dedup the
+stated triples, anti-join them against the store, run the delta-seeded
+fixpoint, then copy the closed store out of the fixpoint's caches.
+``publish()`` commits the accumulated graph as a versioned snapshot
+(sources/snapshots.py), every ``commit_every`` batches or on demand.
+With a streaming ``checkpoint``, a restarted query resumes after the
+last completed batch.
 """
 
 from __future__ import annotations
@@ -86,9 +90,14 @@ class StreamingGraph:
         self._tracker.release(old_gen - self._gen_ids)
 
     def process_batch(self, edges: DataFrame, epoch_id: int) -> None:
+        # the edge plan (extraction UDFs, link joins) runs ONCE: both the
+        # triples and the dictionary rows are read from these blocks,
+        # which are released as soon as both of those exist
+        edges, ids_edges = self._tracker.checkpoint(edges)
         ds = encode_edges(self.spark, edges, src_partition=f"stream:{epoch_id}")
         new_triples, ids_in1 = self._tracker.checkpoint(dedup_triples(ds.triples))
         new_terms, ids_in2 = self._tracker.checkpoint(ds.terms)
+        self._tracker.release(ids_edges)
 
         if self.store is None:
             store, delta = new_triples, None  # round 1 = full deduce
@@ -126,10 +135,11 @@ class StreamingGraph:
     def publish(self) -> int:
         """Commit the accumulated graph as a new snapshot version under
         ``out_dir`` (atomic pointer swap; readers of earlier versions are
-        untouched).  Because incremental maintenance only ever APPENDS
-        facts, the ``snapshot_diff`` between consecutive published
-        versions is pure 'added' rows — a ready-made change feed for
-        downstream consumers of the stream."""
+        untouched).  The ``snapshot_diff`` between consecutive published
+        versions is a ready-made change feed for downstream consumers:
+        across batches without a ``retract_batch`` it is pure 'added'
+        rows (ingest only adds facts); a version published after a
+        retraction also carries the 'removed' rows."""
         from ..sources.snapshots import commit_graph
 
         return commit_graph(self.store, self.terms, self.out_dir)
@@ -163,10 +173,8 @@ def stream_pages_to_graph(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        pages = extract_text(batch_df).persist()
-        edges = stated_edges(spark, pages, alias_dict, entity_types, sameas)
+        edges = stated_edges(spark, extract_text(batch_df), alias_dict, entity_types, sameas)
         sg.process_batch(edges, epoch_id)
-        pages.unpersist()
 
     writer = stream.writeStream.foreachBatch(handle).trigger(availableNow=True)
     if checkpoint:

@@ -379,9 +379,11 @@ def test_streaming_replay_idempotent(spark):
 
 def test_streaming_snapshot_commits_monotone_feed(spark, tmp_path):
     """commit_every=1: each micro-batch publishes a snapshot version of
-    the accumulated graph; because incremental maintenance only appends,
-    the CDC feed between consecutive versions is pure 'added' rows and
-    each version's count equals the store at that batch."""
+    the accumulated graph; with no ``retract_batch`` in between (ingest
+    only adds facts), the CDC feed between consecutive versions is pure
+    'added' rows and each version's count equals the store at that
+    batch.  A version published after a retraction would also carry
+    'removed' rows."""
     from pyspark.sql import functions as F
 
     from inferdf_rs_spark.encode import iri_edges

@@ -134,6 +134,33 @@ def test_conclude_cache_survives_streaming_retract(spark):
     sg._tracker.release()
 
 
+def test_streaming_batch_edge_plan_runs_once(spark):
+    """A live batch's edge plan (extraction UDFs, link joins) is read by
+    both the triples and the dictionary projections: ``process_batch``
+    must run it once, not once per consumer.  A pandas UDF that gates
+    row existence counts the rows it sees."""
+    import pandas as pd
+
+    from inferdf_rs_spark import System
+    from inferdf_rs_spark.encode import iri_edges
+    from inferdf_rs_spark.streaming.ingest import StreamingGraph
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("boolean")
+    def keep(s: pd.Series) -> pd.Series:
+        seen.add(len(s))
+        return pd.Series(True, index=s.index)
+
+    rows = [(EX + a, EX + "knows", EX + b) for a, b in [("a", "b"), ("b", "c"), ("c", "d")]]
+    raw = spark.createDataFrame(rows, "s_lex string, p_lex string, o_lex string")
+    sg = StreamingGraph(spark, System(spark, [_mk_rule()]), out_dir="/tmp/unused")
+    sg.process_batch(iri_edges(raw.filter(keep(F.col("s_lex")))), 0)
+    assert seen.value == len(rows)
+    assert sg.store.count() == 6  # 3 stated + 3 friendOf
+    sg._tracker.release()
+
+
 def test_facets_cache_per_terms_object(spark):
     ds = build_dataset(spark, [(blank("a"), iri(EX + "knows"), blank("b"))])
     f1 = resource_facets(ds.terms)

@@ -36,12 +36,14 @@ def _vecs(spark, n=120, dim=8, dups_every=7):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
 
-def test_embed_near_dup_bucket_kernel_matches_jvm_join(spark):
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_embed_near_dup_bucket_kernel_matches_jvm_join(spark, id_type):
     """The bucket-local kernel's output (ids AND cosine_micro) must equal
     the former formulation: sign-code self-join on (tbl, code), pair
     dedup, then the JVM zip_with/aggregate cosine fold — the reference
-    the DuckDB oracle was originally validated against."""
-    emb = _vecs(spark)
+    the DuckDB oracle was originally validated against.  Ids keep their
+    input type (string ids order lexicographically on both sides)."""
+    emb = _vecs(spark).withColumn("vec_id", F.col("vec_id").cast(id_type))
     dim, n_planes, n_tables, thr = 8, 4, 4, 0.6
 
     got = similarity.embedding_near_dup_pairs(
